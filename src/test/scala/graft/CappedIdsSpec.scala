@@ -30,6 +30,19 @@ class CappedIdsSpec extends AnyFunSuite {
     assert(kept(19).size == 20 && poisoned.contains(20))
   }
 
+  test("duplicate (key, id) rows: each id emitted once, the cap counts rows") {
+    import spark.implicits._
+    // cap 6. key 1: 6 rows, 3 distinct ids (kept, deduplicated); key 2:
+    // 4 distinct ids but 8 rows > cap (poisoned — NULL ⇔ rows > cap)
+    val rows = Seq((1, 5L), (1, 5L), (1, 3L), (1, 7L), (1, 3L), (1, 3L)) ++
+      Seq(1L, 2L, 3L, 4L).flatMap(id => Seq((2, id), (2, id)))
+    val got = rows.toDF("key", "id").repartition(3) // partial merges
+      .groupBy("key")
+      .agg(call_function("graft_capped_ids", col("id"), lit(6)).as("ids"))
+      .as[(Int, Option[Seq[Long]])].collect().toMap
+    assert(got == Map(1 -> Some(Seq(3L, 5L, 7L)), 2 -> None))
+  }
+
   test("cap is a plan-time literal with clear validation") {
     import spark.implicits._
     val df = Seq((1, 1L)).toDF("key", "id")

@@ -351,11 +351,11 @@ class OpsSpec extends AnyFunSuite {
     // reliable-checkpoint mode (the multi-executor deployment choice:
     // localCheckpoint blocks die with a lost executor) produces
     // identical clusters
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
-    val gotCkpt = Dedup.connectedComponents(rnd.toDF("id_a", "id_b"),
-        checkpointDir = Some(ckpt)).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(gotCkpt == want, "checkpointDir run must match localCheckpoint run")
+    val gotCkpt = ReliableCheckpoints(spark) {
+      Dedup.connectedComponents(rnd.toDF("id_a", "id_b")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(gotCkpt == want, "reliable-checkpoint run must match localCheckpoint run")
   }
 
   test("outlinks: quote traps, data-href, bare values, case, order") {
@@ -419,11 +419,11 @@ class OpsSpec extends AnyFunSuite {
     import graft.ops.Graph
     val es = Seq(("a", "c"), ("b", "c"), ("c", "a"), ("a", "b"))
     val edges = es.toDF("src", "dst")
-    val dir = java.nio.file.Files.createTempDirectory("graft-pr-cp").toString
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val got = Graph.pageRank(edges, "src", "dst", iters = 20,
-        checkpointDir = Some(dir), checkpointInterval = 5)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val got = ReliableCheckpoints(spark) {
+      Graph.pageRank(edges, "src", "dst", iters = 20)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
     // VERDICT r4 #4: loop frames must not leak into session LRU —
     // with a reliable dir the checkpoints hold no block-manager RDDs,
     // so no NEW persistent RDD may survive the call (set difference,
@@ -472,12 +472,13 @@ class OpsSpec extends AnyFunSuite {
     // the max node of each score lands exactly on scale; ranks differ
     assert(got.values.map(_._1).max == scale && got.values.map(_._2).max == scale)
     assert(got.values.toSet.size > 1)
-    // deep run with a reliable checkpoint dir: cadence path + no leaks
-    val dir = java.nio.file.Files.createTempDirectory("graft-hits-cp").toString
+    // deep run with a reliable checkpoint dir: per-half-step barriers
+    // + no leaks
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val deep = Graph.hits(edges, "src", "dst", iters = 7,
-      checkpointDir = Some(dir), checkpointInterval = 3)
-    assert(deep.count() == nodes.size.toLong)
+    val deepCount = ReliableCheckpoints(spark) {
+      Graph.hits(edges, "src", "dst", iters = 7).count()
+    }
+    assert(deepCount == nodes.size.toLong)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"hits leaked persisted frames: $leaked")
   }

@@ -20,7 +20,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *     `CAST(... AS DOUBLE)` at output per CLAUDE.md).
   *
   * The same `\s` rule is enforced on the ENGINE side by scanning the
-  * dual-engine query sources for `\s` in non-comment lines.
+  * dual-engine query sources for `\s` in non-comment lines, and the
+  * ops sources are scanned for raw checkpoint calls: every barrier
+  * under `graft.ops` goes through `Barrier`, which owns the
+  * reliable-vs-local checkpoint policy.
   */
 class OracleLintSpec extends AnyFunSuite {
 
@@ -62,6 +65,27 @@ class OracleLintSpec extends AnyFunSuite {
     }
   }
 
+  /** Non-comment lines of `f` (1-based numbers) that satisfy `bad`. */
+  private def codeLines(f: java.io.File)(bad: String => Boolean): List[Int] = {
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    try src.getLines().zipWithIndex.collect { case (line, i)
+        if !line.trim.startsWith("//") && !line.trim.startsWith("*") && bad(line) => i + 1
+    }.toList
+    finally src.close()
+  }
+
+  test("graft.ops checkpoints only through Barrier (no raw localCheckpoint/checkpoint)") {
+    val dir = new java.io.File("src/main/scala/graft/ops")
+    val files = Option(dir.listFiles()).toSeq.flatten.filter(_.getName.endsWith(".scala"))
+    assert(files.exists(_.getName == "Barrier.scala"), s"$dir has no Barrier.scala — update OracleLintSpec")
+    for (f <- files if f.getName != "Barrier.scala") {
+      val offenders = codeLines(f)(l => l.contains("localCheckpoint(") || l.contains(".checkpoint("))
+      assert(offenders.isEmpty,
+        s"$f checkpoints directly on line(s) ${offenders.mkString(",")} — use graft.ops.Barrier " +
+          "(it picks reliable vs local checkpoints from the session's checkpoint dir)")
+    }
+  }
+
   test("no \\s regex in dual-engine query/oracle sources (non-comment lines)") {
     val files = Seq(
       "src/main/scala/graft/Queries.scala",
@@ -70,17 +94,11 @@ class OracleLintSpec extends AnyFunSuite {
     for (f <- files) {
       val file = new java.io.File(f)
       assert(file.exists(), s"lint source $f missing — update OracleLintSpec")
-      val src = scala.io.Source.fromFile(file, "UTF-8")
-      val offenders =
-        try src.getLines().zipWithIndex.filter { case (line, _) =>
-          val t = line.trim
-          // the 2-char sequence backslash+'s' catches the Java form
-          // ("\\s", which contains it) and the SQL form ('\s') alike
-          !t.startsWith("//") && !t.startsWith("*") && line.contains("\\s")
-        }.toList
-        finally src.close()
+      // the 2-char sequence backslash+'s' catches the Java form
+      // ("\\s", which contains it) and the SQL form ('\s') alike
+      val offenders = codeLines(file)(_.contains("\\s"))
       assert(offenders.isEmpty,
-        s"$f has \\s in a regex on line(s) ${offenders.map(_._2 + 1).mkString(",")} " +
+        s"$f has \\s in a regex on line(s) ${offenders.mkString(",")} " +
           "— use an explicit whitespace class (CLAUDE.md)")
     }
   }
